@@ -49,10 +49,9 @@ def _materialize(df) -> int:
 
 def pit_features_events(spark, sf_dir, n_parts):
     """Flagship: PIT feature pipeline over the events stream (as-of join +
-    ffill + sessionize + expanding stats). Uses the pure-JVM window as-of
-    strategy (bit-identical to the sort_merge pandas kernel, tested; 1.4x
-    faster on this pipeline); input repartitioned off the single-split
-    testdata file."""
+    ffill + sessionize + expanding stats; the as-of join is the pure-JVM
+    window kernel); input repartitioned off the single-split testdata
+    file."""
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "user_id", "ts", "event_type", "value")
           .repartition(n_parts))
@@ -60,7 +59,7 @@ def pit_features_events(spark, sf_dir, n_parts):
         ev.where(F.col("event_type") == "purchase")
         .groupBy("user_id", "ts").agg(F.max("value").alias("purch_val"))
     )
-    out = asof.asof_join(ev, purchases, entity="user_id", ts="ts", strategy="window")
+    out = asof.asof_join(ev, purchases, entity="user_id", ts="ts")
     out = temporal.ffill(out, ["purch_val"], entity="user_id", ts="ts", tiebreak=["event_id"])
     out = temporal.sessionize(out, gap_seconds=3600, entity="user_id", ts="ts", tiebreak=["event_id"])
     out = temporal.expanding_stats(out, "value", entity="user_id", ts="ts", tiebreak=["event_id"],

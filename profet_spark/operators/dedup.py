@@ -66,6 +66,8 @@ Scale notes:
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
@@ -102,22 +104,27 @@ class PersistScope:
 
     Materialize (write/collect/count) the output BEFORE the scope
     exits — after release the plan recomputes from source (correct,
-    just slower). Scopes nest; each releases only its own frames.
-    Driver-side single-threaded by design (module-level active scope),
-    matching how the batch pipelines drive these operators."""
+    just slower). Scopes nest; each releases only its own frames. The
+    active scope is per thread: a stream's ``foreachBatch`` sink and
+    the driver thread never register into each other's scopes."""
 
-    _active: "PersistScope | None" = None
+    _active = threading.local()  # .scope: the thread's innermost scope
 
     def __init__(self) -> None:
         self.frames: list[DataFrame] = []
 
+    @classmethod
+    def current(cls) -> "PersistScope | None":
+        """The calling thread's innermost open scope, if any."""
+        return getattr(cls._active, "scope", None)
+
     def __enter__(self) -> "PersistScope":
-        self._prev = PersistScope._active
-        PersistScope._active = self
+        self._prev = PersistScope.current()
+        PersistScope._active.scope = self
         return self
 
     def __exit__(self, *exc) -> None:
-        PersistScope._active = self._prev
+        PersistScope._active.scope = self._prev
         self.release()
 
     def release(self) -> None:
@@ -128,8 +135,9 @@ class PersistScope:
 
 def _register(df: DataFrame) -> DataFrame:
     """Track an already-persisted frame in the active scope, if any."""
-    if PersistScope._active is not None:
-        PersistScope._active.frames.append(df)
+    scope = PersistScope.current()
+    if scope is not None:
+        scope.frames.append(df)
     return df
 
 

@@ -14,26 +14,19 @@ EVERY feature table to every spine row.
 Why not N :func:`profet_spark.operators.asof.asof_join` calls? Each call
 re-shuffles and re-sorts the spine — N exchanges + N sorts + N operator
 boundaries over the widest table in the pipeline. At 10^12-row scale the
-spine dominates, so this operator instead:
-
-1. tags the spine and all N feature tables with a side marker,
-2. packs each table's value columns into ONE struct payload column
-   (``__pay_<name>``; other tables' payload slots ride as null),
-3. ``unionByName`` everything into a single relation,
-4. runs a SINGLE window ``last(__pay_i, ignorenulls=True)`` per table —
-   all N carries share one ``partitionBy(entity).orderBy(ts, side)``
-   spec, so Catalyst folds them into ONE WindowExec: the whole assembly
-   is ONE hash exchange + ONE within-partition sort, Python-free,
-   regardless of how many feature tables are attached
-   (plan-asserted in tests/test_feature_matrix.py).
+spine dominates, so this operator hands all N feature tables to the
+as-of window kernel (``asof._attach``) at once: each table's value
+columns ride as one struct payload, and the N carries share one
+``partitionBy(entity).orderBy(ts, side)`` spec, so Catalyst folds them
+into ONE WindowExec — the whole assembly is ONE hash exchange + ONE
+within-partition sort, Python-free, regardless of how many feature tables
+are attached (plan-asserted in tests/test_feature_matrix.py).
 
 Semantics per table match ``asof_join`` exactly (backward direction,
-``allow_exact_matches``, optional per-table tolerance); the two paths are
-bit-identical, which tests cross-check via ``strategy="sequential"``.
-
-Like the window as-of strategy, a feature table holding several rows at
-one (entity, ts) must be pre-aggregated to one row per key — the carried
-row among equal-ts duplicates is otherwise unspecified (the same
+``allow_exact_matches``, optional per-table tolerance); the tests check
+both against pandas ``merge_asof``. A feature table holding several rows
+at one (entity, ts) must be pre-aggregated to one row per key — the
+carried row among equal-ts duplicates is otherwise unspecified (the same
 precondition ``pd.merge_asof`` imposes).
 """
 
@@ -43,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from profet_spark.operators.asof import _entity_cols
+from profet_spark.operators.asof import _attach, _entity_cols, _Right, _ts_guarded
 
 _SIDE = "__fm_side"
 
@@ -100,18 +93,6 @@ def _output_names(
     return out
 
 
-def _ts_checked(df: DataFrame, ts: str) -> DataFrame:
-    # same loud contract as asof_join: point-in-time semantics are
-    # undefined for NULL ts, and the window carry would silently smear
-    # values across it
-    return df.withColumn(ts, F.when(
-        F.col(ts).isNull(),
-        F.raise_error(F.lit(
-            f"point_in_time_matrix: NULL {ts} — point-in-time rows must "
-            "carry a timestamp")).cast(df.schema[ts].dataType),
-    ).otherwise(F.col(ts)))
-
-
 def _tol_for(tolerance_s, name: str):
     if tolerance_s is None:
         return None
@@ -139,7 +120,6 @@ def point_in_time_matrix(
     tolerance_s: dict[str, float] | float | None = None,
     embargo_s: dict[str, float] | float | None = None,
     keep_feature_ts: bool = False,
-    strategy: str = "window",
 ) -> DataFrame:
     """Attach the as-of row of every feature table to every spine row.
 
@@ -169,125 +149,18 @@ def point_in_time_matrix(
     ``ts_spine - ts_f``. The shift is exact int64 microseconds. With an
     embargo, :func:`leakage_audit`'s ``min_staleness_us`` is >= the
     embargo for every matched row — the auditable invariant.
-
-    ``strategy="window"`` (default) is the single-exchange fused plan
-    documented in the module docstring; ``"sequential"`` chains one
-    :func:`asof_join` per table (N exchanges) — the cross-check/fallback
-    path, bit-identical output.
     """
     if not features:
         raise ValueError("point_in_time_matrix: no feature tables given")
-    names = list(features)
     pairs = _output_names(spine, features, entity, ts, keep_feature_ts)
-
-    if strategy == "sequential":
-        return _pit_sequential(spine, features, pairs, entity, ts,
-                               allow_exact_matches, tolerance_s, embargo_s,
-                               keep_feature_ts)
-    if strategy != "window":
-        raise ValueError(f"unknown point_in_time_matrix strategy: {strategy}")
-
-    spine = _ts_checked(spine, ts)
-    spine_cols = spine.columns
-
-    # right rows order BEFORE left at equal ts for <= semantics, AFTER for
-    # strict < — identical rule to asof._asof_window. All feature tables
-    # share one side value: equal-ts rows of different tables cannot
-    # interfere, each carries only its own payload column.
-    r_side = 0 if allow_exact_matches else 1
-    l_side = 1 - r_side
-
-    tagged = [spine.withColumn(_SIDE, F.lit(l_side))]
-    pay_cols = {}
-    for name in names:
-        fdf = _ts_checked(features[name], ts)
-        pay = F.struct(
-            F.col(ts).alias("__rts"),
-            *[F.col(src).alias(dst) for src, dst in pairs[name]],
-        )
-        pc = f"__pay_{name}"
-        pay_cols[name] = pc
-        # embargo: shift this table's SORT key only — __rts in the payload
-        # keeps the original event time for tolerance/audit
-        emb_us = _embargo_micros(embargo_s, name)
-        sort_ts = F.col(ts)
-        if emb_us:
-            sort_ts = F.col(ts) + F.expr(f"INTERVAL '{emb_us}' MICROSECOND")
-        tagged.append(fdf.select(
-            *[F.col(c) for c in _entity_cols(entity)], sort_ts.alias(ts),
-            pay.alias(pc), F.lit(r_side).alias(_SIDE),
-        ))
-
-    u = tagged[0]
-    for t in tagged[1:]:
-        u = u.unionByName(t, allowMissingColumns=True)
-
-    # one spec -> Catalyst evaluates every carry in a single WindowExec
-    w = (Window.partitionBy(*_entity_cols(entity)).orderBy(ts, _SIDE)
-         .rowsBetween(Window.unboundedPreceding, 0))
-
-    # the window must run over the FULL union (feature rows included), so
-    # the carries are computed in a projection BEFORE the side filter.
-    # Identical window expressions are deduplicated by Catalyst's
-    # ExtractWindowExpressions, and every carry shares spec `w`, so the
-    # whole loop lands in ONE WindowExec (plan-asserted)
-    carry_cols = []
-    final = [F.col(c) for c in spine_cols]
-    for name in names:
-        matched = F.last(pay_cols[name], ignorenulls=True).over(w)
-        tol = _tol_for(tolerance_s, name)
-        if tol is not None:
-            # NTZ timestamps can't cast straight to numeric in Spark 4 —
-            # hop through TIMESTAMP (session TZ pinned UTC ⇒ identity)
-            sec = lambda c: c.cast("timestamp").cast("double")  # noqa: E731
-            matched = F.when(
-                (sec(F.col(ts)) - sec(matched["__rts"])) <= float(tol),
-                matched)
-        mc = f"__m_{name}"
-        carry_cols.append(matched.alias(mc))
-        final.extend(F.col(mc)[dst].alias(dst) for _, dst in pairs[name])
-        if keep_feature_ts:
-            final.append(F.col(mc)["__rts"].alias(f"{name}_asof_ts"))
-
-    carried = u.select(F.col(_SIDE), *[F.col(c) for c in spine_cols], *carry_cols)
-    return carried.where(F.col(_SIDE) == l_side).select(*final)
-
-
-def _pit_sequential(spine, features, pairs, entity, ts, allow_exact,
-                    tolerance_s, embargo_s, keep_feature_ts):
-    """N chained as-of joins — the reference plan the fused window path is
-    tested bit-identical against. Each feature table is pre-projected to
-    its FINAL output names, so no suffixing can fire inside asof_join.
-    An embargo shifts the right ts (as in the window path); asof_join's
-    internal tolerance then sees the shifted gap (true staleness minus
-    embargo), so the true-staleness bound is restored by NARROWING it by
-    the same embargo — and a bound narrower than the embargo itself can
-    never match (every visible row is already >= embargo stale)."""
-    from profet_spark.operators.asof import asof_join
-
-    out = spine
-    for name, fdf in features.items():
-        emb_us = _embargo_micros(embargo_s, name)
-        jts = F.col(ts)
-        if emb_us:
-            jts = F.col(ts) + F.expr(f"INTERVAL '{emb_us}' MICROSECOND")
-        sel = [F.col(c) for c in _entity_cols(entity)] + [jts.alias(ts)]
-        sel += [F.col(src).alias(dst) for src, dst in pairs[name]]
-        if keep_feature_ts:
-            sel.append(F.col(ts).alias(f"{name}_asof_ts"))
-        right = fdf.select(*sel)
-        tol = _tol_for(tolerance_s, name)
-        if tol is not None and emb_us:
-            tol = float(tol) - emb_us / 1_000_000
-            if tol < 0:
-                right = right.where(F.lit(False))
-                tol = None
-        out = asof_join(
-            out, right, entity=entity, ts=ts, strategy="sort_merge",
-            tolerance_s=tol,
-            allow_exact_matches=allow_exact,
-        )
-    return out
+    rights = [
+        _Right(fdf, pairs[name], _tol_for(tolerance_s, name),
+               _embargo_micros(embargo_s, name),
+               f"{name}_asof_ts" if keep_feature_ts else None)
+        for name, fdf in features.items()
+    ]
+    return _attach(spine, rights, entity, ts, allow_exact_matches,
+                   "point_in_time_matrix")
 
 
 def leakage_audit(
@@ -411,8 +284,8 @@ def windowed_spine_agg(
             f"windowed_spine_agg: column(s) {clashes} collide with "
             "internal scratch names — rename them")
     keys = _entity_cols(entity)
-    spine = _ts_checked(spine, ts)
-    feature = _ts_checked(feature, ts)
+    spine = _ts_guarded(spine, ts, "windowed_spine_agg")
+    feature = _ts_guarded(feature, ts, "windowed_spine_agg")
     srcs = sorted({src for _, src in aggs.values()})
     f_cols = {c: f"__wf_{c}" for c in srcs}
 

@@ -24,9 +24,8 @@ grades them bitwise, and single-pass distributed plans that survive a
   at most one average partition's rows. One ``groupBy`` (partial-agg
   shuffle on the key), a 1-row totals aggregate broadcast back, and a
   ``TakeOrderedAndProject`` for the top-N — the full key histogram is
-  never collected or globally sorted. This is the measurement half of
-  the salted as-of strategy (operators/asof.py): profile first, salt
-  the keys the profile flags.
+  never collected or globally sorted. Profile first, then salt the keys
+  the profile flags.
 
 Reference parity: ProFET has no input validation or skew handling
 (single-process loop over a FASTA file — [R] FeatureGen.py ≈L1040-1100
@@ -210,9 +209,8 @@ def skew_profile(df: DataFrame, key_cols: list[str] | str, top_n: int = 20,
       ``ceil(cnt * num_partitions / total)`` as pure integer arithmetic
       ``(cnt*P + total - 1) DIV total``: the number of salted sub-keys
       needed so each slice carries at most one average partition's rows
-      (1 = unskewed, leave it alone). This is the measured input to
-      operators/asof.py's salted strategy and to AQE's skew-join
-      threshold tuning.
+      (1 = unskewed, leave it alone). This is the measured input to a
+      salted repartition and to AQE's skew-join threshold tuning.
     - ``rank`` — 1-based by ``(cnt DESC, key ASC)`` (deterministic
       tiebreak).
 

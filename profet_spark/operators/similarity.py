@@ -210,7 +210,7 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             "rank", F.lit(1).cast("int"))
     # broadcast, don't closure-capture: a captured matrix is cloudpickled
     # into EVERY task binary (N tasks x size driver egress); a broadcast
-    # variable ships once per executor (same pattern as asof._asof_broadcast)
+    # variable ships once per executor
     bq = corpus.sparkSession.sparkContext.broadcast((
         [r["id"] for r in q_rows],
         np.asarray([r["q"] for r in q_rows], dtype=np.int64),

@@ -174,7 +174,6 @@ def resample_to_grid(
     entity: str | list[str] = "image_id",
     ts: str = "ts",
     every_seconds: int = 3600,
-    strategy: str = "window",
     max_points_per_entity: int = 1_000_000,
 ) -> DataFrame:
     """W9: regularize an irregular snapshot stream onto a fixed time grid.
@@ -187,7 +186,8 @@ def resample_to_grid(
     1. grid generation: one hash aggregate (min/max per entity) then a
        narrow ``sequence``+``explode`` over integer epochs — no Python;
     2. value attachment: the engine's own :func:`asof.asof_join` (grid is
-       the probe side), inheriting its partitioning/skew machinery.
+       the left side) — one union-window Exchange, no per-grid-point
+       probe.
 
     Duplicate (entity, ts) value rows are pre-reduced with ``max`` so the
     attachment is deterministic regardless of physical row order.
@@ -196,8 +196,7 @@ def resample_to_grid(
     length span/every — a long-lived entity at a fine grid is a per-task
     memory hazard, so ``max_points_per_entity`` fails LOUDLY (raise_error
     in the plan, no extra scan) instead of OOM-ing an executor; widen
-    ``every_seconds`` or split the time range. Grid rows join as-of via one
-    union-window Exchange (strategy="window") — no per-grid-point probe.
+    ``every_seconds`` or split the time range.
     """
     keys = [entity] if isinstance(entity, str) else list(entity)
     every = int(every_seconds)
@@ -228,7 +227,7 @@ def resample_to_grid(
              F.timestamp_seconds("_ge").cast(df.schema[ts].dataType).alias(ts))
     from profet_spark.operators import asof as _asof  # lazy: avoid pkg-init cycle
 
-    return _asof.asof_join(grid, vals, entity=entity, ts=ts, strategy=strategy)
+    return _asof.asof_join(grid, vals, entity=entity, ts=ts)
 
 
 def rolling_quantile(

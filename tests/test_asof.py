@@ -1,6 +1,9 @@
-"""As-of join: all four physical strategies must agree with a pandas
-merge_asof oracle and with each other, including under skew (SURVEY.md
-§5.2-6) and with zero leakage (no right row after left ts is attached)."""
+"""As-of join: the one window kernel must agree with a pandas merge_asof
+oracle across the exact/strict x tolerance matrix, including under skew
+(SURVEY.md §5.2-6) and with zero leakage (no right row after left ts is
+attached)."""
+
+import datetime
 
 import numpy as np
 import pandas as pd
@@ -9,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from profet_spark.operators import asof
-from profet_spark.operators.asof import asof_join, detect_hot_keys
+from profet_spark.operators.asof import asof_join
 
 
 def _mk_fixture(seed=7, n_entities=40, hot_frac=0.3):
@@ -56,22 +59,21 @@ def fixture_dfs(spark):
     return spark.createDataFrame(lp), spark.createDataFrame(rp), lp, rp
 
 
-@pytest.mark.parametrize("strategy", ["sort_merge", "broadcast", "salted", "window"])
-def test_asof_matches_oracle(spark, fixture_dfs, strategy):
+@pytest.mark.parametrize("allow_exact", [True, False])
+@pytest.mark.parametrize("tol", [None, 3600.0])
+def test_asof_matches_oracle(spark, fixture_dfs, allow_exact, tol):
     ldf, rdf, lp, rp = fixture_dfs
-    kw = {}
-    if strategy == "salted":
-        kw["hot_keys"] = ["e0000"]
-    got = _norm(asof_join(ldf, rdf, strategy=strategy, **kw).toPandas())
-    want = _oracle(lp, rp)
-    assert len(got) == len(want) == len(lp)
-    pd.testing.assert_series_equal(got["upd"], want["upd"], check_names=False)
+    got = _norm(asof_join(ldf, rdf, tolerance_s=tol,
+                          allow_exact_matches=allow_exact).toPandas())
+    want = _oracle(lp, rp, allow_exact=allow_exact, tolerance_s=tol)
+    assert len(got) == len(lp)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
 def test_asof_strict_and_tolerance(spark, fixture_dfs):
     ldf, rdf, lp, rp = fixture_dfs
-    got = _norm(asof_join(ldf, rdf, strategy="sort_merge",
-                          allow_exact_matches=False, tolerance_s=50_000).toPandas())
+    got = _norm(asof_join(ldf, rdf, allow_exact_matches=False,
+                          tolerance_s=50_000).toPandas())
     want = _oracle(lp, rp, allow_exact=False, tolerance_s=50_000)
     pd.testing.assert_series_equal(got["upd"], want["upd"], check_names=False)
 
@@ -80,182 +82,65 @@ def test_asof_zero_leakage(spark, fixture_dfs):
     """Poison every right row strictly after each left ts: results must be
     unchanged when future rows are dropped entirely."""
     ldf, rdf, lp, rp = fixture_dfs
-    full = _norm(asof_join(ldf, rdf, strategy="sort_merge").toPandas())
+    full = _norm(asof_join(ldf, rdf).toPandas())
     t_cut = lp["ts"].quantile(0.5)
     l_cut = lp[lp.ts <= t_cut]
     r_cut = rp[rp.ts <= t_cut]
     cut = _norm(
-        asof_join(spark.createDataFrame(l_cut), spark.createDataFrame(r_cut),
-                  strategy="sort_merge").toPandas()
+        asof_join(spark.createDataFrame(l_cut), spark.createDataFrame(r_cut)).toPandas()
     )
     full_cut = full[full.ts <= t_cut].reset_index(drop=True)
     pd.testing.assert_frame_equal(full_cut, cut, check_like=True)
 
 
-def test_detect_hot_keys(spark, fixture_dfs):
-    ldf, _, lp, _ = fixture_dfs
-    hot = detect_hot_keys(ldf, "image_id", frac=0.1)
-    assert hot == ["e0000"]
+def _t(s):
+    return datetime.datetime(2024, 1, 1, 0, 0, s)
 
 
-def test_asof_salted_equals_unsalted(spark, fixture_dfs):
-    ldf, rdf, lp, rp = fixture_dfs
-    a = _norm(asof_join(ldf, rdf, strategy="sort_merge").toPandas())
-    b = _norm(asof_join(ldf, rdf, strategy="salted", hot_keys=["e0000"], salt=4).toPandas())
-    pd.testing.assert_frame_equal(a, b, check_like=True)
-
-
-@pytest.mark.parametrize("allow_exact", [True, False])
-@pytest.mark.parametrize("tol", [None, 3600.0])
-def test_window_strategy_equals_sort_merge(spark, fixture_dfs, allow_exact, tol):
-    """The pure-JVM window strategy must reproduce the pandas merge kernel
-    exactly across the exact/strict x tolerance matrix."""
-    ldf, rdf = fixture_dfs[0], fixture_dfs[1]
-    a = _norm(asof_join(ldf, rdf, strategy="sort_merge",
-                        tolerance_s=tol, allow_exact_matches=allow_exact).toPandas())
-    b = _norm(asof_join(ldf, rdf, strategy="window",
-                        tolerance_s=tol, allow_exact_matches=allow_exact).toPandas())
-    pd.testing.assert_frame_equal(a, b)
-
-
-@pytest.mark.parametrize("allow_exact,tol", [(True, None), (False, None),
-                                             (True, 3600.0), (False, 3600.0)])
-def test_sort_merge_streaming_kernel_multi_batch(spark, fixture_dfs, allow_exact, tol):
-    """The merge kernel streams Arrow batches with only a latest-right-per-
-    entity carry; forcing tiny batches (so one partition spans MANY batches,
-    splitting entities and equal-ts runs across batch boundaries) must not
-    change a single row vs the pure-JVM window strategy."""
-    ldf, rdf = fixture_dfs[0], fixture_dfs[1]
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "7")
-    try:
-        a = _norm(asof_join(ldf, rdf, strategy="sort_merge", tolerance_s=tol,
-                            allow_exact_matches=allow_exact).toPandas())
-    finally:
-        spark.conf.set(key, prev)
-    b = _norm(asof_join(ldf, rdf, strategy="window", tolerance_s=tol,
-                        allow_exact_matches=allow_exact).toPandas())
-    pd.testing.assert_frame_equal(a, b)
-
-
-def test_streaming_kernel_strict_equal_ts_across_batches(spark):
-    """Regression: with allow_exact_matches=False, a left row must fall
-    back to the latest right with a STRICTLY smaller ts even when the
-    equal-ts right row arrived in an earlier Arrow batch (the carry keeps
-    the last two distinct-ts rows per entity, not just one)."""
-    import datetime
-    t = lambda s: datetime.datetime(2024, 1, 1, 0, 0, s)  # noqa: E731
-    left = spark.createDataFrame([("e", t(2), 1)], ["image_id", "ts", "k"])
+def test_asof_strict_falls_back_past_equal_ts(spark):
+    """With allow_exact_matches=False a left row rejects the right row at
+    its own ts and takes the latest one strictly before it."""
+    left = spark.createDataFrame([("e", _t(2), 1)], ["image_id", "ts", "k"])
     right = spark.createDataFrame(
-        [("e", t(1), 10.0), ("e", t(2), 20.0)], ["image_id", "ts", "v"])
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "1")  # every row its own batch
-    try:
-        got = asof_join(left, right, strategy="sort_merge",
-                        allow_exact_matches=False, num_partitions=1).toPandas()
-    finally:
-        spark.conf.set(key, prev)
+        [("e", _t(1), 10.0), ("e", _t(2), 20.0)], ["image_id", "ts", "v"])
+    got = asof_join(left, right, allow_exact_matches=False).toPandas()
     assert got.v.tolist() == [10.0]
 
 
-def test_streaming_kernel_null_entity_across_batches(spark):
-    """Regression: null entity keys must survive the cross-batch carry
-    (pandas groupby drops NaN groups by default) — multi-batch result must
-    equal the single-batch result."""
-    import datetime
-    t = lambda s: datetime.datetime(2024, 1, 1, 0, 0, s)  # noqa: E731
-    left = spark.createDataFrame([(None, t(2), 1), ("e", t(3), 2)],
+def test_asof_null_entity_matches_null_entity(spark):
+    """A NULL entity key is one group, as in merge_asof: a NULL-entity
+    left row attaches the NULL-entity right row and nothing else."""
+    left = spark.createDataFrame([(None, _t(2), 1), ("e", _t(3), 2)],
                                  "image_id string, ts timestamp, k int")
-    right = spark.createDataFrame([(None, t(1), 10.0), ("e", t(1), 30.0)],
+    right = spark.createDataFrame([(None, _t(1), 10.0), ("e", _t(1), 30.0)],
                                   "image_id string, ts timestamp, v double")
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key)
-
-    def run():
-        return (asof_join(left, right, strategy="sort_merge",
-                          num_partitions=1).toPandas()
-                .sort_values("k").v.tolist())
-
-    single = run()
-    spark.conf.set(key, "1")
-    try:
-        multi = run()
-    finally:
-        spark.conf.set(key, prev)
-    assert multi == single == [10.0, 30.0]
+    got = asof_join(left, right).toPandas().sort_values("k")
+    assert got.v.tolist() == [10.0, 30.0]
 
 
-def test_asof_auto_strategy_selection(spark, sf_dir):
-    """auto must (a) pick the broadcast path for a provably small build
-    side — observable as a shuffle-free plan (left is never exchanged,
-    the build side is collected at plan-build time) — and (b) produce the
-    same rows as the window strategy either way."""
-    from profet_spark import plans
-    from profet_spark.sources import load_table
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "value")
-    right = (ev.groupBy("user_id")
-             .agg(F.min("ts").alias("ts"))
-             .withColumn("rv", F.lit(1.0)))
-    auto = asof_join(ev, right, entity="user_id", ts="ts", strategy="auto")
-    assert plans.is_shuffle_free(auto)
-    want = (asof_join(ev, right, entity="user_id", ts="ts", strategy="window")
-            .toPandas().sort_values("event_id").reset_index(drop=True))
-    got = auto.toPandas().sort_values("event_id").reset_index(drop=True)
-    assert got["rv"].fillna(-1).tolist() == want["rv"].fillna(-1).tolist()
-
-
-def test_asof_auto_upgrades_to_salted_on_hot_keys(spark, sf_dir):
-    """auto + hot_keys (and a large-ish build side) must take the salted
-    path — observable by the salt projection in the plan."""
-    from profet_spark import plans
-    from profet_spark.sources import load_table
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "value")
-    right = ev.groupBy("user_id", "ts").agg(F.max("value").alias("rv"))
-    out = asof_join(ev, right, entity="user_id", ts="ts", strategy="auto",
-                         hot_keys=[1, 2], broadcast_threshold=10)
-    assert "__asof_salt" in plans.formatted_plan(out)
-    want = (asof_join(ev, right, entity="user_id", ts="ts", strategy="window")
-            .toPandas().sort_values("event_id").reset_index(drop=True))
-    got = out.toPandas().sort_values("event_id").reset_index(drop=True)
-    assert got["rv"].fillna(-1).tolist() == want["rv"].fillna(-1).tolist()
-
-
-def test_detect_hot_keys_with_table_stats(spark, fixture_dfs):
-    """Passing total_rows (from table statistics) must skip the count and
-    return the same keys — the no-second-scan path (VERDICT r2 #5)."""
-    ldf, _, lp, _ = fixture_dfs
-    hot = detect_hot_keys(ldf, "image_id", frac=0.1, total_rows=len(lp))
-    assert hot == ["e0000"]
-
-
-def test_asof_null_ts_raises_in_every_strategy(spark, fixture_dfs):
-    """NULL ts = undefined point-in-time semantics: one loud uniform
-    contract (merge_asof used to raise an opaque executor ValueError
-    while the window strategy silently carried values across)."""
+def test_asof_null_ts_raises(spark, fixture_dfs):
+    """NULL ts = undefined point-in-time semantics: one loud contract on
+    either side, backward and forward (the window carry would otherwise
+    silently smear values across the NULL)."""
     ldf, rdf, lp, rp = fixture_dfs
     lnull = ldf.withColumn(
         "ts", F.when(F.col("x") == lp.x.iloc[0], None).otherwise(F.col("ts")))
-    for strategy in ["sort_merge", "broadcast", "salted", "window"]:
-        with pytest.raises(Exception, match="NULL ts"):
-            asof_join(lnull, rdf, strategy=strategy,
-                      hot_keys=["e0001"]).count()
     rnull = rdf.withColumn(
         "ts", F.when(F.col("upd") == rp.upd.iloc[0], None).otherwise(F.col("ts")))
-    with pytest.raises(Exception, match="NULL ts"):
-        asof_join(ldf, rnull, strategy="sort_merge").count()
+    for left, right in ((lnull, rdf), (ldf, rnull)):
+        with pytest.raises(Exception, match="asof_join: NULL ts"):
+            asof_join(left, right).count()
+    with pytest.raises(Exception, match="label_join: NULL ts"):
+        asof.label_join(lnull, rdf).count()
 
 
 def test_asof_output_name_collision_raises(spark, fixture_dfs):
     """left(x, x_r) x right(x): the suffixed name collides with a left
-    column — must raise clearly, not fail inside Arrow conversion."""
+    column — must raise clearly instead of emitting duplicate labels."""
     ldf, rdf, _, _ = fixture_dfs
     left2 = ldf.withColumn("upd", F.lit(1.0)).withColumn("upd_r", F.lit(2.0))
     with pytest.raises(ValueError, match="collides"):
-        asof_join(left2, rdf, strategy="sort_merge")
+        asof_join(left2, rdf)
 
 
 # ---------------------------------------------------------- composite keys
@@ -263,7 +148,7 @@ def test_asof_output_name_collision_raises(spark, fixture_dfs):
 
 def _mk_composite_fixture(seed=23, n_entities=12):
     """Two-column entity key (image_id, cam): per-(id, cam) histories that
-    would cross-contaminate if any strategy merged on image_id alone."""
+    would cross-contaminate if the join partitioned on image_id alone."""
     rng = np.random.default_rng(seed)
     base = pd.Timestamp("2025-01-01")
     rows_l, rows_r = [], []
@@ -285,13 +170,10 @@ def _mk_composite_fixture(seed=23, n_entities=12):
     return lp, rp.reset_index(drop=True)
 
 
-@pytest.mark.parametrize("strategy", ["sort_merge", "broadcast", "salted", "window"])
-def test_asof_composite_key_matches_oracle(spark, strategy):
+def test_asof_composite_key_matches_oracle(spark):
     lp, rp = _mk_composite_fixture()
     ldf, rdf = spark.createDataFrame(lp), spark.createDataFrame(rp)
-    hot = [("e000", "a"), ("e001", "b")] if strategy == "salted" else None
-    out = asof_join(ldf, rdf, entity=["image_id", "cam"], ts="ts",
-                    strategy=strategy, hot_keys=hot).toPandas()
+    out = asof_join(ldf, rdf, entity=["image_id", "cam"], ts="ts").toPandas()
     want = pd.merge_asof(
         lp.sort_values("ts", kind="mergesort"),
         rp.sort_values("ts", kind="mergesort"),
@@ -301,16 +183,6 @@ def test_asof_composite_key_matches_oracle(spark, strategy):
     out = out.sort_values(key).reset_index(drop=True)
     want = want.sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(out, want, check_dtype=False)
-
-
-def test_detect_hot_keys_composite_returns_tuples(spark):
-    lp, _ = _mk_composite_fixture()
-    hot_half = pd.concat([lp, pd.DataFrame(
-        [("e000", "a", pd.Timestamp("2025-01-02"), 0.0)] * len(lp),
-        columns=lp.columns)], ignore_index=True)
-    hot = detect_hot_keys(spark.createDataFrame(hot_half),
-                          ["image_id", "cam"], frac=0.25)
-    assert hot == [("e000", "a")]
 
 
 class TestIntervalJoin:

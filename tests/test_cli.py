@@ -64,7 +64,8 @@ def test_cli_rejects_nonpositive_shuffle_partitions(spark):
 def test_package_version_matches_distribution_metadata():
     import profet_spark
     import re
-    toml = open("/root/repo/pyproject.toml").read()
+    toml = open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "..", "pyproject.toml")).read()
     m = re.search(r'^version = "([^"]+)"', toml, re.M)
     assert m and m.group(1) == profet_spark.__version__
 

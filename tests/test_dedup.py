@@ -964,6 +964,25 @@ def test_persist_scope_nests_and_is_opt_in(spark, sf_dir):
         assert len(outer.frames) == n_outer  # inner released its own
 
 
+def test_persist_scope_is_per_thread(spark):
+    """A scope entered on one thread does not capture a persist
+    registered from another thread (a stream's foreachBatch sink runs
+    on its own thread while the driver thread holds a scope)."""
+    import threading
+
+    df = spark.range(3)
+    with dedup.PersistScope() as scope:
+        t = threading.Thread(target=dedup._register, args=(df,))
+        t.start()
+        t.join(timeout=30)
+        assert not t.is_alive()
+        assert scope.frames == []
+        assert dedup.PersistScope.current() is scope
+        dedup._register(df)
+        assert scope.frames == [df]
+    assert dedup.PersistScope.current() is None
+
+
 def test_signature_store_ingest_two_day_replay(spark, sf_dir, tmp_path):
     """VERDICT r4 ask #7: two daily ingests through the signature store
     must surface exactly the pairs of the one-shot full run that touch

@@ -50,7 +50,9 @@ TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
 
 
 def _load_entry():
-    spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
+                        "__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("__spark_entry__", path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -213,7 +215,7 @@ def test_scoped_rotation_bounds_cache_to_two_queries():
 
     def fake(spark, sf_dir):
         # record which scope was active during construction
-        calls.append(_dd.PersistScope._active)
+        calls.append(_dd.PersistScope.current())
         return None
 
     wrapped = ENTRY._scoped(fake)
@@ -221,7 +223,7 @@ def test_scoped_rotation_bounds_cache_to_two_queries():
         wrapped(None, None)
     assert len(ENTRY._QUERY_SCOPES) == 2
     # the active scope is restored after each call
-    assert _dd.PersistScope._active is None
+    assert _dd.PersistScope.current() is None
     # each call saw its own fresh scope
     assert len({id(s) for s in calls}) == 5
     ENTRY._QUERY_SCOPES.clear()

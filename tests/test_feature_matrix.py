@@ -1,7 +1,7 @@
 """Point-in-time training-matrix assembly (feature-store spine join):
-the fused single-window plan must be bit-identical to N chained as-of
-joins and to a pandas merge_asof oracle, leak nothing, and stay a
-single-Exchange single-WindowExec Python-free plan."""
+the fused single-window plan must equal N chained pandas merge_asof
+calls, leak nothing, and stay a single-Exchange single-WindowExec
+Python-free plan."""
 
 import numpy as np
 import pandas as pd
@@ -41,11 +41,18 @@ def _mk_fixture(seed=11, n_entities=30):
     return sp, ap.reset_index(drop=True), bp.reset_index(drop=True)
 
 
-def _oracle(sp, ap, bp, allow_exact=True, tol_a=None, tol_b=None):
+def _with_asof_ts(fp, name, keep_ts):
+    """The feature table plus, with ``keep_ts``, its ``<name>_asof_ts``
+    audit column: the feature's own (unshifted) event time."""
+    return fp.assign(**{f"{name}_asof_ts": fp["ts"]}) if keep_ts else fp
+
+
+def _oracle(sp, ap, bp, allow_exact=True, tol_a=None, tol_b=None,
+            keep_ts=False):
     out = sp.sort_values("ts", kind="mergesort")
-    for fp, tol in ((ap, tol_a), (bp, tol_b)):
+    for name, fp, tol in (("fa", ap, tol_a), ("fb", bp, tol_b)):
         out = pd.merge_asof(
-            out, fp.sort_values("ts", kind="mergesort"),
+            out, _with_asof_ts(fp, name, keep_ts).sort_values("ts", kind="mergesort"),
             on="ts", by="image_id", direction="backward",
             allow_exact_matches=allow_exact,
             tolerance=pd.Timedelta(seconds=tol) if tol else None,
@@ -75,16 +82,15 @@ def test_matrix_matches_oracle(spark, dfs, allow_exact):
     pd.testing.assert_frame_equal(_norm(out), exp, check_dtype=False)
 
 
-def test_matrix_strategies_bit_identical(spark, dfs):
-    sdf, adf, bdf, *_ = dfs
-    kw = dict(entity="image_id", ts="ts", keep_feature_ts=True,
-              tolerance_s={"fa": 200_000.0})
-    win = point_in_time_matrix(sdf, {"fa": adf, "fb": bdf}, strategy="window", **kw)
-    seq = point_in_time_matrix(sdf, {"fa": adf, "fb": bdf}, strategy="sequential", **kw)
-    assert win.columns == seq.columns
-    wp = _norm(win.toPandas())
-    sq = _norm(seq.toPandas())
-    pd.testing.assert_frame_equal(wp, sq)
+def test_matrix_asof_ts_matches_oracle(spark, dfs):
+    sdf, adf, bdf, sp, ap, bp = dfs
+    out = point_in_time_matrix(
+        sdf, {"fa": adf, "fb": bdf}, entity="image_id", ts="ts",
+        keep_feature_ts=True, tolerance_s={"fa": 200_000.0})
+    assert out.columns == ["image_id", "ts", "x", "fa_val", "fa_n",
+                           "fa_asof_ts", "fb_val", "fb_asof_ts"]
+    exp = _oracle(sp, ap, bp, tol_a=200_000, keep_ts=True)
+    pd.testing.assert_frame_equal(_norm(out.toPandas()), exp, check_dtype=False)
 
 
 def test_matrix_zero_leakage_audit_column(spark, dfs):
@@ -303,13 +309,13 @@ def test_leakage_audit_single_pass_plan(spark, dfs):
 
 
 def _oracle_embargo(sp, ap, bp, emb_a=None, emb_b=None, allow_exact=True,
-                    tol_a=None, tol_b=None):
+                    tol_a=None, tol_b=None, keep_ts=False):
     """merge_asof twin of the embargo semantics: shift the feature ts by
     the embargo; the shifted gap is true staleness MINUS the embargo, so a
     true-staleness tolerance narrows by the embargo on the shifted axis."""
     out = sp.sort_values("ts", kind="mergesort")
-    for fp, emb, tol in ((ap, emb_a, tol_a), (bp, emb_b, tol_b)):
-        f = fp.copy()
+    for name, fp, emb, tol in (("fa", ap, emb_a, tol_a), ("fb", bp, emb_b, tol_b)):
+        f = _with_asof_ts(fp, name, keep_ts).copy()
         if emb:
             f["ts"] = f["ts"] + pd.Timedelta(seconds=emb)
         t = (tol - (emb or 0)) if tol else None
@@ -353,18 +359,18 @@ def test_matrix_embargo_boundary(spark, allow_exact):
         assert pd.isna(out["fv"]).all()
 
 
-def test_matrix_embargo_strategies_bit_identical(spark, dfs):
-    sdf, adf, bdf, *_ = dfs
-    kw = dict(entity="image_id", ts="ts", keep_feature_ts=True,
-              embargo_s={"fa": 100_000.0, "fb": 33_333.5},
-              tolerance_s={"fa": 200_000.0})
-    win = point_in_time_matrix(sdf, {"fa": adf, "fb": bdf},
-                               strategy="window", **kw)
-    seq = point_in_time_matrix(sdf, {"fa": adf, "fb": bdf},
-                               strategy="sequential", **kw)
-    assert win.columns == seq.columns
-    pd.testing.assert_frame_equal(_norm(win.toPandas()),
-                                  _norm(seq.toPandas()))
+def test_matrix_embargo_asof_ts_matches_oracle(spark, dfs):
+    """Mixed embargos + a true-staleness tolerance + the audit column:
+    ``<name>_asof_ts`` keeps the feature's event time, not the shifted
+    sort key."""
+    sdf, adf, bdf, sp, ap, bp = dfs
+    out = point_in_time_matrix(
+        sdf, {"fa": adf, "fb": bdf}, entity="image_id", ts="ts",
+        keep_feature_ts=True, embargo_s={"fa": 100_000.0, "fb": 33_333.5},
+        tolerance_s={"fa": 200_000.0})
+    exp = _oracle_embargo(sp, ap, bp, emb_a=100_000, emb_b=33_333.5,
+                          tol_a=200_000, keep_ts=True)
+    pd.testing.assert_frame_equal(_norm(out.toPandas()), exp, check_dtype=False)
 
 
 def test_matrix_embargo_auditable_min_staleness(spark, dfs):
@@ -404,13 +410,12 @@ def test_matrix_embargo_plan_stays_fused(spark, dfs):
 
 def test_matrix_tolerance_narrower_than_embargo_never_matches(spark, dfs):
     """Every embargo-visible row is >= embargo stale, so a true-staleness
-    tolerance below the embargo can match nothing — both strategies."""
+    tolerance below the embargo can match nothing."""
     sdf, adf, *_ = dfs
-    for strat in ("window", "sequential"):
-        out = point_in_time_matrix(
-            sdf, {"fa": adf}, entity="image_id", ts="ts", strategy=strat,
-            embargo_s=100_000.0, tolerance_s=50_000.0)
-        assert out.where(F.col("fa_val").isNotNull()).count() == 0, strat
+    out = point_in_time_matrix(
+        sdf, {"fa": adf}, entity="image_id", ts="ts",
+        embargo_s=100_000.0, tolerance_s=50_000.0)
+    assert out.where(F.col("fa_val").isNotNull()).count() == 0
 
 
 def _wagg_oracle(sp, fp, window_s, allow_exact=True):

@@ -6,6 +6,7 @@ aggregation, and shuffle-free plans where we designed them to be
 shuffle-free."""
 
 import importlib.util
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,7 +21,8 @@ SF = "/root/testdata/sf0.001"
 
 def _load_entry():
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py")
+        "__spark_entry__",
+        Path(__file__).resolve().parents[1] / "__spark_entry__.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -92,7 +94,7 @@ def test_asof_window_strategy_is_pure_jvm(spark):
     """J3 window strategy: Exchange+Sort+Window only — no Python nodes."""
     ev = load_table(spark, SF, "events").select("user_id", "ts", "event_id", "value")
     right = (ev.groupBy("user_id", "ts").agg(F.max("value").alias("v")))
-    out = asof.asof_join(ev, right, entity="user_id", ts="ts", strategy="window")
+    out = asof.asof_join(ev, right, entity="user_id", ts="ts")
     plan = _plan(out)
     assert "Window" in plan
     for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):

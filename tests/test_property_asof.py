@@ -1,8 +1,8 @@
 """Hypothesis property test for the as-of join (SURVEY.md §5.2): on
 arbitrary small inputs — duplicate timestamps, empty sides, single-entity,
-interleaved entities — every strategy must equal pandas ``merge_asof``
+interleaved entities — the as-of join must equal pandas ``merge_asof``
 (the independent reference implementation of the backward as-of
-semantics)."""
+semantics) with and without a tolerance."""
 
 import numpy as np
 import pandas as pd
@@ -28,7 +28,7 @@ def asof_case(draw):
     right_rows = {}
     for _ in range(n_right):
         # unique (entity, ts) on the build side — the operator contract
-        # (pre-aggregate duplicates upstream, as every strategy documents)
+        # (pre-aggregate duplicates upstream, as asof.py documents)
         key = (draw(hst.sampled_from(ents)),
                _ts_pool[draw(hst.integers(0, len(_ts_pool) - 1))])
         right_rows[key] = float(draw(hst.integers(-5, 5)))
@@ -38,47 +38,35 @@ def asof_case(draw):
     return left, right
 
 
-def _want(left, right, allow_exact):
+def _want(left, right, allow_exact, tolerance_s, direction="backward"):
     lp = left.sort_values(["ts", "event_id"], kind="mergesort").reset_index(drop=True)
     if right.empty:
         out = lp.copy()
         out["rv"] = np.nan
         return out.sort_values(["event_id"]).reset_index(drop=True)
     rp = right.sort_values("ts", kind="mergesort").reset_index(drop=True)
-    out = pd.merge_asof(lp, rp, on="ts", by="user_id", direction="backward",
-                        allow_exact_matches=allow_exact)
+    tol = pd.Timedelta(seconds=tolerance_s) if tolerance_s is not None else None
+    out = pd.merge_asof(lp, rp, on="ts", by="user_id", direction=direction,
+                        allow_exact_matches=allow_exact, tolerance=tol)
     return out.sort_values(["event_id"]).reset_index(drop=True)
 
 
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(case=asof_case(), allow_exact=hst.booleans(),
-       strategy=hst.sampled_from(["window", "sort_merge", "broadcast"]))
-def test_asof_property(spark, case, allow_exact, strategy):
+       tolerance_s=hst.sampled_from([None, 3600.0, 86400.0]))
+def test_asof_property(spark, case, allow_exact, tolerance_s):
     left, right = case
     ldf = spark.createDataFrame(left)
     rdf = spark.createDataFrame(right, schema="user_id string, ts timestamp, rv double")
     got = (asof.asof_join(ldf, rdf, entity="user_id", ts="ts",
-                          strategy=strategy, allow_exact_matches=allow_exact)
+                          tolerance_s=tolerance_s, allow_exact_matches=allow_exact)
            .toPandas().sort_values("event_id").reset_index(drop=True))
-    want = _want(left, right, allow_exact)
+    want = _want(left, right, allow_exact, tolerance_s)
     assert got["event_id"].tolist() == want["event_id"].tolist()
     np.testing.assert_allclose(got["rv"].to_numpy(dtype=float),
                                want["rv"].to_numpy(dtype=float),
                                equal_nan=True)
-
-
-def _want_forward(left, right, allow_exact, horizon_s):
-    lp = left.sort_values(["ts", "event_id"], kind="mergesort").reset_index(drop=True)
-    if right.empty:
-        out = lp.copy()
-        out["rv"] = np.nan
-        return out.sort_values(["event_id"]).reset_index(drop=True)
-    rp = right.sort_values("ts", kind="mergesort").reset_index(drop=True)
-    tol = pd.Timedelta(seconds=horizon_s) if horizon_s is not None else None
-    out = pd.merge_asof(lp, rp, on="ts", by="user_id", direction="forward",
-                        allow_exact_matches=allow_exact, tolerance=tol)
-    return out.sort_values(["event_id"]).reset_index(drop=True)
 
 
 @settings(max_examples=12, deadline=None,
@@ -96,7 +84,7 @@ def test_label_join_forward_property(spark, case, allow_exact, horizon):
                            allow_exact_matches=allow_exact,
                            horizon_s=horizon)
            .toPandas().sort_values("event_id").reset_index(drop=True))
-    want = _want_forward(left, right, allow_exact, horizon)
+    want = _want(left, right, allow_exact, horizon, "forward")
     assert got["event_id"].tolist() == want["event_id"].tolist()
     np.testing.assert_allclose(got["rv"].to_numpy(dtype=float),
                                want["rv"].to_numpy(dtype=float),

@@ -259,8 +259,10 @@ def test_tokenizer_and_normalizer_match_duckdb_bitwise(spark, texts):
     from profet_spark.functions import textstats as ts
     from profet_spark.operators.dedup import normalized
 
+    from pathlib import Path
+
     spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py")
+        "entry_mod", Path(__file__).resolve().parents[1] / "__spark_entry__.py")
     entry = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry)
 

@@ -80,8 +80,7 @@ def _batch_asof_want(spark, sf_dir):
         "event_id", "user_id", "ts", "event_type", "value")
     purchases = (ev.where(F.col("event_type") == "purchase")
                  .groupBy("user_id", "ts").agg(F.max("value").alias("pv")))
-    out = asof.asof_join(ev, purchases, entity="user_id", ts="ts",
-                         strategy="window")
+    out = asof.asof_join(ev, purchases, entity="user_id", ts="ts")
     return out.select("event_id", "user_id", "value", F.col("pv").alias("pv_asof"))
 
 
